@@ -120,9 +120,8 @@ object Bench {
       val dim = spark.read.parquet(s"$benchDir-dim")
       val t = time {
         val df = spark.read.parquet(benchDir)
-        // one-scan path: stats ride the violations count via observe;
-        // uniqueness is the default count-only direct groupBy (the
-        // single-node-fast strategy — see SuiteConfig.uniquenessHashFirst)
+        // one-scan path: stats ride the count-only uniqueness scan via
+        // observe (see Validator.validateOneScan)
         Validator.validateOneScan(spark, df, dim, suiteCfg)
       }
       spark.catalog.clearCache() // no run subsidizes the next

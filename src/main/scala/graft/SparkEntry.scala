@@ -16,7 +16,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val cfg = SequenceSynth.Config(rows = 20000)
     // the flagship path: one-scan fused validation (stats observed on the
-    // violations action; see Validator.validateOneScan)
+    // uniqueness scan; see Validator.validateOneScan)
     val report = Validator.validateOneScan(spark,
       SequenceSynth.sequences(spark, cfg),
       SequenceSynth.sourcesDim(spark, cfg),

@@ -86,9 +86,10 @@ object Main {
             ResumableValidator.run(spark, input, dim, cfg, statePath)
           case None =>
             val df = spark.read.parquet(input)
-            val rep = Validator.validate(spark, df, dim, cfg)
-            ResumableValidator.RunSummary(rep, Nil, Nil,
-              rep.sourceStats.agg(sum("n_rows")).collect()(0).getLong(0))
+            val rep = Validator.validateOneScan(spark, df, dim, cfg)
+            val rows = rep.sourceStats.agg(sum("n_rows")).collect()(0).getLong(0)
+            ResumableValidator.RunSummary(rep, Nil, Nil, rows,
+              validatedRows = rows, skippedRows = 0L)
         }
         val secs = (System.nanoTime() - t0) / 1e9
         val verdicts = summary.report.verdicts.collect()
@@ -103,7 +104,8 @@ object Main {
             println(f"  [$mark] ${r.getAs[String]("source")}%-8s ${r.getAs[String]("check")}%-15s " +
               s"observed=${r.getAs[String]("observed")} expected=${r.getAs[String]("expected")}")
           }
-        println(f"throughput: ${summary.totalRows / secs}%.0f validated sequences/sec ($secs%.1f s)")
+        println(s"Rows validated: ${summary.validatedRows} | skipped (checkpointed): ${summary.skippedRows}")
+        println(f"throughput: ${summary.validatedRows / secs}%.0f validated sequences/sec ($secs%.1f s)")
         if (opts.contains("suggest-ddl")) {
           println("Suggested narrowest-fitting DDL (observed -> column):")
           Validator.suggestDdl(summary.report.sourceStats.collect())

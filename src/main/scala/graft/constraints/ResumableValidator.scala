@@ -18,7 +18,11 @@ object ResumableValidator {
       report: ValidationReport,
       validatedSources: Seq[String],
       skippedSources: Seq[String],
-      totalRows: Long)
+      totalRows: Long,
+      /** rows scanned by this run (the revalidated partitions) */
+      validatedRows: Long,
+      /** rows served from state: the skipped partitions' manifest counts */
+      skippedRows: Long)
 
   def run(spark: SparkSession, inputPath: String, dim: DataFrame,
           cfg: SuiteConfig, statePath: String): RunSummary = {
@@ -29,7 +33,7 @@ object ResumableValidator {
       s"$inputPath has no source= partitions; use Validator.validate for unpartitioned input")
     val input = spark.read.parquet(inputPath)
 
-    if (todo.nonEmpty) {
+    val validatedRows = if (todo.isEmpty) 0L else {
       val todoSources = todo.map(_.source)
       // partition-pruned scan: only not-yet-validated sources are read.
       // ONE scan per run: the per-source stats ride the violations write
@@ -60,6 +64,7 @@ object ResumableValidator {
         Checkpoint.writeManifest(spark, statePath, pl,
           freshRowCounts.getOrElse(pl.source, 0L))
       }
+      freshRowCounts.values.sum
     }
 
     // assemble from state for ALL current sources
@@ -84,10 +89,14 @@ object ResumableValidator {
       .parquet(Checkpoint.verdictsPath(statePath))
 
     val totalRows = stats.map(_.getAs[Long]("n_rows")).sum
+    val skippedRows = done.flatMap(pl =>
+      Checkpoint.readManifestInfo(spark, statePath, pl.source).flatMap(_._2)).sum
     RunSummary(
       ValidationReport(verdicts, viols, Validator.statsToDf(spark, stats)),
       validatedSources = todo.map(_.source),
       skippedSources = done.map(_.source),
-      totalRows = totalRows)
+      totalRows = totalRows,
+      validatedRows = validatedRows,
+      skippedRows = skippedRows)
   }
 }

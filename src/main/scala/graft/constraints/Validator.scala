@@ -15,19 +15,16 @@ import graft.stats.{Drift, KllSketchAgg}
   * identity + reason (the parser's failed-lines channel, parser.clj:9-28).
   *
   * Execution shape (designed for 10^12 rows / 1000 executors):
-  *  - ONE full-data scan computes all row-level flags AND per-source stat
-  *    sketches: flags are plain Catalyst expressions (whole-stage codegen),
-  *    the groupBy(source) aggregation is partially aggregated map-side, so
-  *    the only full shuffle ships a handful of sketch rows per input
-  *    partition, never data rows.
-  *  - Violation rows are a filter over the same scan (no extra pass; the
-  *    filter and the agg share the scan via one job each over a cached
-  *    columnar batch or two parquet scans — at scale two scans of pruned
-  *    columns beat caching 100 TB).
+  *  - ONE full-data scan per suite call ([[validateOneScan]]): the
+  *    per-source stat sketches are an `observe` (CollectMetrics) aggregate
+  *    riding the uniqueness scan, below its map-side partial aggregation,
+  *    so the only full shuffle ships 16-byte key hashes, never data rows.
   *  - Global exact uniqueness is the one unavoidable wide shuffle; it
-  *    projects (doc_id, source) only — ~1% of table width — and relies on
-  *    AQE to coalesce/split skewed partitions. A cheap HLL pre-check per
-  *    source allows skipping it when estimated distinct == rows.
+  *    projects a hash pair of doc_id and relies on AQE to coalesce/split
+  *    skewed partitions.
+  *  - Violation rows are a lazy filter over the input (one native mask
+  *    walk per row); totals come from the stats counters, so the report
+  *    reads the rows only when a caller asks for them.
   *  - Referential, drift (PSI/KS over merged KLL sketches), and
   *    declared-fit verdicts are computed driver-side from the per-source
   *    sketch table (KBs, independent of data size).
@@ -46,15 +43,6 @@ object Validator {
       tokenPsiThreshold: Double = 0.25,
       /** run the exact global uniqueness shuffle (vs HLL estimate only) */
       exactUniqueness: Boolean = true,
-      /** uniqueness exchange strategy for [[Validator.validateOneScan]]:
-        * false (default) groups the key column directly — one scan, one
-        * exchange of the keys; measured fastest on a single node where
-        * shuffle is a memcpy. true uses [[Validator.duplicateKeysHashFirst]]
-        * — two narrow scans but the wide exchange ships 8-byte hashes
-        * instead of key strings; the right trade on a network-bound
-        * cluster where exchange BYTES, not scans, are the ceiling.
-        */
-      uniquenessHashFirst: Boolean = false,
       /** cap violation rows sampled per check (driver/report safety) */
       violationSampleCap: Int = 10000,
       /** declared column DDL (reference db_types side door): observed
@@ -209,26 +197,6 @@ object Validator {
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n"), collect_set(col("source")).as("sources"))
       .filter(col("n") > 1)
-
-  /** Exact duplicate keys with a HASH-FIRST shuffle: phase 1 groups by
-    * `xxhash64(doc_id)` so the wide exchange ships 8-byte longs instead of
-    * key strings (5x+ narrower here; the win grows with key width — URLs,
-    * content IDs). Phase 2 exactly re-groups by the real doc_id ONLY the
-    * rows whose hash bucket held more than one row — 64-bit collisions
-    * between distinct keys are separated there (and at 10^12 rows they DO
-    * occur, ~n^2/2^65 of them), so the result is exact, identical to
-    * [[duplicateKeys]] minus the `sources` column. The candidate set is
-    * violation-rare in healthy data, so phase 2's join broadcasts (AQE)
-    * and its groupBy shuffles almost nothing.
-    */
-  def duplicateKeysHashFirst(df: DataFrame): DataFrame = {
-    val keyed = df.select(col("doc_id"), xxhash64(col("doc_id")).as("__h"))
-    val dupHashes = keyed.groupBy(col("__h"))
-      .agg(count(lit(1)).as("hn")).filter(col("hn") > 1).select("__h")
-    keyed.join(dupHashes, "__h")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-  }
 
   /** Salted two-phase exact duplicate counting for HOT keys: when a single
     * doc_id may repeat millions of times, a plain groupBy(doc_id) puts one
@@ -453,8 +421,8 @@ object Validator {
     }.toSeq.sortBy(t => (t._1, t._2))
   }
 
-  /** (n duplicated keys, n extra rows) under the configured uniqueness
-    * strategy — None when `cfg.exactUniqueness` is off.
+  /** (n duplicated keys, n extra rows) — None when `cfg.exactUniqueness`
+    * is off.
     */
   private[graft] def dupStats(df: DataFrame, cfg: SuiteConfig): Option[(Long, Long)] =
     if (!cfg.exactUniqueness) None
@@ -469,12 +437,10 @@ object Validator {
       // groups them (SQL grouping treats NULLs equal), counting as one
       // duplicated key when 2+ rows; per-source null counts are the
       // n_null_docid check's job.
-      val dups =
-        if (cfg.uniquenessHashFirst) duplicateKeysHashFirst(df)
-        else df.select(xxhash64(col("doc_id")).as("__h"),
-            graft.ops.Dedup.contentHash2(col("doc_id")).as("__h2"))
-          .groupBy(col("__h"), col("__h2"))
-          .agg(count(lit(1)).as("n")).filter(col("n") > 1)
+      val dups = df.select(xxhash64(col("doc_id")).as("__h"),
+          graft.ops.Dedup.contentHash2(col("doc_id")).as("__h2"))
+        .groupBy(col("__h"), col("__h2"))
+        .agg(count(lit(1)).as("n")).filter(col("n") > 1)
       val r = dups.agg(count(lit(1)).as("k"),
         coalesce(sum(col("n") - 1), lit(0L)).as("extra")).collect()(0)
       Some((r.getLong(0), r.getLong(1)))
@@ -505,7 +471,10 @@ object Validator {
     (observed, thunk)
   }
 
-  /** One-shot (non-resumable) validation of an in-memory DataFrame. */
+  /** One-shot (non-resumable) validation in two scans (grouped stats,
+    * then uniqueness) — the reference shape the specs pin
+    * [[validateOneScan]] against.
+    */
   def validate(spark: SparkSession, df: DataFrame, dim: DataFrame,
                cfg: SuiteConfig = SuiteConfig()): ValidationReport = {
     val stats = sourceStats(df, cfg).collect()
@@ -515,19 +484,19 @@ object Validator {
     ValidationReport(verdicts, viols, statsToDf(spark, stats))
   }
 
-  /** ONE-SCAN validation: the per-source stats ride the violations scan as
-    * an `observe` (CollectMetrics) aggregate ([[SuiteStatsBySourceAgg]]),
-    * so the suite's two full-data passes collapse into one — at 100 TB the
-    * table scan IS the cost, and this halves it. Uniqueness is a count-only
-    * exchange over the pruned key column (~1% of table width); set
-    * `cfg.uniquenessHashFirst` on network-bound clusters (see SuiteConfig).
+  /** ONE-SCAN validation: the per-source stats ride the uniqueness scan
+    * as an `observe` (CollectMetrics) aggregate ([[SuiteStatsBySourceAgg]])
+    * below its map-side partial aggregation, so the suite reads the table
+    * once — at 100 TB the table scan IS the cost. Uniqueness is a
+    * count-only exchange of a 16-byte key hash pair ([[dupStats]]).
     *
-    * Because observed metrics only materialize when an ACTION runs over
-    * the instrumented frame, this method runs the violations action
-    * itself: `violationsOut = Some(path)` writes the violation rows as
-    * parquet (the pipeline shape — the scan does double duty), `None`
-    * counts them. The returned report's `violations` frame re-derives
-    * violations lazily for further use.
+    * Observed metrics only materialize when an ACTION runs over the
+    * instrumented frame, so exactly one action runs over it: the
+    * uniqueness aggregation. Without `cfg.exactUniqueness` the stats ride
+    * a violations count instead; with `violationsOut = Some(path)` they
+    * ride the violations parquet write (the pipeline shape), and
+    * uniqueness is its own pass. The returned report's `violations` frame
+    * derives violations lazily for further use.
     *
     * Semantics are pinned identical to [[validate]] by FusedValidateSpec
     * (same verdicts; same stats up to sketch-internal randomness).
@@ -536,13 +505,17 @@ object Validator {
                       cfg: SuiteConfig = SuiteConfig(),
                       violationsOut: Option[String] = None): ValidationReport = {
     val (observed, statsThunk) = observeStats(df, cfg)
-    val viols = violations(observed, cfg)
-    violationsOut match {
-      case Some(path) => viols.write.mode("overwrite").parquet(path)
-      case None       => viols.count()
+    val ridesUniqueness = cfg.exactUniqueness && violationsOut.isEmpty
+    if (!ridesUniqueness) {
+      val viols = violations(observed, cfg)
+      violationsOut match {
+        case Some(path) => viols.write.mode("overwrite").parquet(path)
+        case None       => viols.count()
+      }
     }
+    val dups = dupStats(if (ridesUniqueness) observed else df, cfg)
     val stats = statsThunk()
-    val verdicts = buildVerdicts(spark, stats, dim.collect(), dupStats(df, cfg), cfg)
+    val verdicts = buildVerdicts(spark, stats, dim.collect(), dups, cfg)
     ValidationReport(verdicts, violations(df, cfg), statsToDf(spark, stats))
   }
 

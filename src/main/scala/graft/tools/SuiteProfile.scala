@@ -70,10 +70,6 @@ object SuiteProfile {
     bestOf("stage_dup_stats") {
       Validator.dupStats(df, suiteCfg)
     }
-    bestOf("stage_dup_hash_first") {
-      Validator.duplicateKeysHashFirst(df)
-        .agg(count(lit(1)), coalesce(sum(col("n") - 1), lit(0L))).collect()
-    }
     bestOf("full_validate") {
       val rep = Validator.validate(spark, df,
         spark.read.parquet(s"$dir-dim"), suiteCfg)

@@ -252,6 +252,32 @@ class PlanSpec extends AnyFunSuite {
     assert(viols.queryExecution.executedPlan.toString.contains("CollectMetrics"))
   }
 
+  test("validateOneScan reads the table once: stats observed below the uniqueness exchange") {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val df = spark.read.parquet(seqDir)
+    val dim = SequenceSynth.sourcesDim(spark, SequenceSynth.Config(rows = 5000))
+    spark.listenerManager.register(listener)
+    try {
+      Validator.validateOneScan(spark, df, dim, suite)
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    object H extends AdaptiveSparkPlanHelper
+    val scans = plans.flatMap(p => H.collect(p) { case s: FileSourceScanExec => s })
+    assert(scans.size == 1, s"one input scan per suite call, saw:\n${plans.mkString("\n")}")
+    val exchanges = plans.flatMap(p => H.collect(p) { case e: ShuffleExchangeExec => e })
+    assert(exchanges.exists(e => H.find(e.child)(_.isInstanceOf[CollectMetricsExec]).isDefined),
+      s"stats must be observed on the uniqueness scan:\n${plans.mkString("\n")}")
+  }
+
   test("dupSpans flags via a partial aggregate, never a single-partition by-hash window") {
     import spark.implicits._
     val docs = (0 until 60).map(i => (i.toLong,

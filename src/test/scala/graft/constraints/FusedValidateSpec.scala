@@ -8,9 +8,8 @@ import graft.SharedSpark
 import graft.sequences.SequenceSynth
 
 /** Pins the ONE-SCAN validation path ([[Validator.validateOneScan]]:
-  * observe-fused stats + count-only uniqueness, with
-  * [[Validator.duplicateKeysHashFirst]] as the opt-in cluster strategy)
-  * semantically identical to the classic two-scan [[Validator.validate]]. Sketch BYTES are exempt
+  * stats observed on the count-only uniqueness scan) semantically
+  * identical to the classic two-scan [[Validator.validate]]. Sketch BYTES are exempt
   * (KLL compaction is randomized and merge order differs between an
   * exchange and an observe accumulator — CLAUDE.md invariant: assert
   * verdict decisions, never sketch readouts); everything exact — counters,
@@ -63,12 +62,21 @@ class FusedValidateSpec extends AnyFunSuite {
     }
   }
 
+  private def decisions(rep: Validator.ValidationReport) =
+    rep.verdicts.collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2))
+      .sortBy(_._1).toSeq
+
   test("fused verdict decisions match the classic report exactly") {
-    def decisions(rep: Validator.ValidationReport) =
-      rep.verdicts.collect()
-        .map(r => (r.getString(0), r.getString(1)) -> r.getBoolean(2))
-        .sortBy(_._1).toSeq
     assert(decisions(fused) == decisions(classic))
+  }
+
+  test("without exact uniqueness the stats ride the violations count, same report") {
+    val rep = Validator.validateOneScan(spark, df, dim,
+      suite.copy(exactUniqueness = false))
+    assert(rep.sourceStats.collect().map(statKey).sortBy(_._1).toSeq ==
+      classic.sourceStats.collect().map(statKey).sortBy(_._1).toSeq)
+    assert(decisions(rep) == decisions(classic).filterNot(_._1._2 == "uniqueness"))
   }
 
   test("fused violation rows are the same rows") {
@@ -77,16 +85,15 @@ class FusedValidateSpec extends AnyFunSuite {
     assert(f.toSeq == c.toSeq)
   }
 
-  test("hash-first duplicate keys == direct groupBy, including null keys") {
+  test("count-only uniqueness == duplicateKeys counts, null ids counted as one key") {
     val withNulls = df.unionByName(
       df.limit(3).withColumn("doc_id", lit(null.asInstanceOf[String])))
     val direct = Validator.duplicateKeys(withNulls)
       .select("doc_id", "n").collect()
-      .map(r => (Option(r.getString(0)), r.getLong(1))).sortBy(_._1)
-    val hashed = Validator.duplicateKeysHashFirst(withNulls).collect()
-      .map(r => (Option(r.getString(0)), r.getLong(1))).sortBy(_._1)
-    assert(hashed.toSeq == direct.toSeq)
+      .map(r => (Option(r.getString(0)), r.getLong(1)))
     assert(direct.exists(_._1.isEmpty)) // the planted null group is seen
+    assert(Validator.dupStats(withNulls, suite) ==
+      Some((direct.length.toLong, direct.map(_._2 - 1).sum)))
   }
 
   test("violationsOut writes the violation rows as part of the one scan") {

@@ -38,10 +38,13 @@ class ResumeSpec extends AnyFunSuite {
     assert(first.validatedSources.toSet ==
       Set("web", "books", "code", "chat", "ghost"))
     assert(first.totalRows == cfg.rows)
+    assert((first.validatedRows, first.skippedRows) == ((cfg.rows, 0L)))
 
     val second = ResumableValidator.run(spark, inPath, dim, suite, statePath)
     assert(second.validatedSources.isEmpty)
     assert(second.skippedSources.toSet == first.validatedSources.toSet)
+    // a no-change rerun validates nothing: throughput must not count skips
+    assert((second.validatedRows, second.skippedRows) == ((0L, cfg.rows)))
     assert(verdictSet(second) == verdictSet(first))
     // violations survive the skip
     assert(second.report.violations.count() == first.report.violations.count())
