@@ -96,9 +96,9 @@ object Main {
         val failed = verdicts.count(!_.getAs[Boolean]("pass"))
         println(f"Analyzed ${summary.totalRows} entries. $failed constraint(s) failed.")
         if (summary.validatedSources.nonEmpty || summary.skippedSources.nonEmpty)
-          println(s"Validated partitions: ${summary.validatedSources.sorted.mkString(",")}" +
-            s" | skipped (checkpointed): ${summary.skippedSources.sorted.mkString(",")}")
-        verdicts.sortBy(r => (r.getAs[String]("source"), r.getAs[String]("check")))
+          println(s"Validated partitions: ${summary.validatedSources.sortBy(Option(_)).mkString(",")}" +
+            s" | skipped (checkpointed): ${summary.skippedSources.sortBy(Option(_)).mkString(",")}")
+        verdicts.sortBy(r => (Option(r.getAs[String]("source")), r.getAs[String]("check")))
           .foreach { r =>
             val mark = if (r.getAs[Boolean]("pass")) "PASS" else "FAIL"
             println(f"  [$mark] ${r.getAs[String]("source")}%-8s ${r.getAs[String]("check")}%-15s " +
@@ -252,11 +252,14 @@ object Main {
 
       case "state-audit" =>
         // lineage audit of a validation state dir vs its input: per
-        // partition, is the checkpoint CURRENT (fingerprint matches —
-        // a rerun skips it), CHANGED (input files moved under it), or
-        // NEW (never validated)? Plus manifests whose partition left
-        // the input (ORPHANED). Read-only; run it before `validate` to
-        // see what a rerun will actually do.
+        // partition, is the checkpoint CURRENT (fingerprint matches and
+        // the manifest's stats decode — a rerun skips it), NO-STATS
+        // (fingerprint matches, stats missing or undecodable, e.g. an
+        // old-layout manifest — a rerun revalidates), CHANGED (input
+        // files moved under it), or NEW (never validated)? Plus
+        // manifests whose partition left the input (ORPHANED).
+        // Read-only; run it before `validate` to see what a rerun will
+        // actually do.
         val input = opts("input")
         val statePath = opts("state") // no default: validate has none,
         // and guessing a path would confidently print all-NEW for a
@@ -279,24 +282,30 @@ object Main {
           s"no manifests under $statePath/manifests: wrong --state, " +
             "or validate has not run yet")
         val inputs = graft.lineage.Checkpoint.inputPartitions(spark, input)
-        inputs.sortBy(_.source).foreach { pl =>
+        inputs.sortBy(_.dir).foreach { pl =>
+          // "current" is exactly the planner's skip predicate
+          val skips = graft.lineage.Checkpoint.checkpointed(spark, statePath, pl).isDefined
           graft.lineage.Checkpoint
-            .readManifestInfo(spark, statePath, pl.source) match {
-            case Some((Some(fp), n)) if fp == pl.fingerprint =>
-              println(f"  state ${pl.source}%-12s current  " +
+            .readManifestInfo(spark, statePath, pl.dir) match {
+            case Some((_, n)) if skips =>
+              println(f"  state ${pl.dir}%-12s current  " +
                 s"n_rows=${n.map(_.toString).getOrElse("?")}")
+            case Some((Some(fp), n)) if fp == pl.fingerprint =>
+              println(f"  state ${pl.dir}%-12s NO-STATS (was n_rows=" +
+                s"${n.map(_.toString).getOrElse("?")}; stats missing or " +
+                "undecodable; revalidation needed)")
             case Some((Some(_), n)) =>
-              println(f"  state ${pl.source}%-12s CHANGED  " +
+              println(f"  state ${pl.dir}%-12s CHANGED  " +
                 s"(was n_rows=${n.map(_.toString).getOrElse("?")}; " +
                 "revalidation needed)")
             case Some((None, _)) =>
-              println(f"  state ${pl.source}%-12s UNPARSEABLE manifest " +
+              println(f"  state ${pl.dir}%-12s UNPARSEABLE manifest " +
                 "(no fingerprint; a rerun revalidates)")
             case None =>
-              println(f"  state ${pl.source}%-12s NEW      (never validated)")
+              println(f"  state ${pl.dir}%-12s NEW      (never validated)")
           }
         }
-        val live = inputs.map(_.source).toSet
+        val live = inputs.map(_.dir).toSet
         manifests.filterNot(live).sorted
           .foreach(s => println(f"  state $s%-12s ORPHANED (partition left the input)"))
 

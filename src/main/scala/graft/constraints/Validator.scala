@@ -305,7 +305,7 @@ object Validator {
     val drift = {
       val sketches = stats.map { r =>
         r.getAs[String]("source") -> r.getAs[Array[Byte]]("kll_ntok")
-      }.sortBy(_._1)
+      }.sortBy(t => Option(t._1))
       sketches.map { case (s, bytes) =>
         val self = KllSketchAgg.fromBytes(bytes)
         val rest = KllSketchAgg.mergeBytes(
@@ -351,7 +351,7 @@ object Validator {
     // completeness (reverse referential): every dim source must have data
     // — a silently missing partition is the upload failure the reference's
     // diagnosis use-case exists to catch before training reads the table
-    val completeness = dim.map(_.getAs[String]("source")).sorted.map { s =>
+    val completeness = dim.map(_.getAs[String]("source")).sortBy(Option(_)).map { s =>
       bySource.get(s) match {
         case Some(r) =>
           vRow(s, "completeness", pass = true,
@@ -370,7 +370,7 @@ object Validator {
         // collection.Seq: fused-agg rows surface mutable.ArraySeq here
         r.getAs[String]("source") ->
           r.getAs[scala.collection.Seq[Long]]("hist_token").toArray
-      }.sortBy(_._1)
+      }.sortBy(t => Option(t._1))
       hists.map { case (s, self) =>
         val rest = hists.collect { case (o, h) if o != s => h }
           .reduceOption(graft.stats.TokenHistAgg.add)
@@ -418,7 +418,7 @@ object Validator {
         (s, colName, graft.types.SchemaType.render(obs),
           dialect.schemaTypeToColType(obs))
       }
-    }.toSeq.sortBy(t => (t._1, t._2))
+    }.toSeq.sortBy(t => (Option(t._1), t._2))
   }
 
   /** (n duplicated keys, n extra rows) — None when `cfg.exactUniqueness`
@@ -446,6 +446,13 @@ object Validator {
       Some((r.getLong(0), r.getLong(1)))
     }
 
+  /** Layout of a per-source stats row: the source key, then the fused
+    * suite-stats fields.
+    */
+  private[graft] val statsSchema: StructType = StructType(
+    StructField("source", StringType, nullable = true) +:
+      SuiteStatsAgg.schema.fields)
+
   /** Attach the by-source suite-stats observation to `df`. After exactly
     * ONE action runs over the returned frame, the thunk yields the stats
     * rows (the [[sourceStats]] schema) — the fused one-scan machinery
@@ -459,9 +466,6 @@ object Validator {
       SuiteStatsBySourceAgg.suite_stats_by_source(
         col("source"), col("doc_id"), col("tokens"), col("n_tok"), cfg)
         .as("stats"))
-    val statsSchema = StructType(
-      StructField("source", StringType, nullable = true) +:
-        SuiteStatsAgg.schema.fields)
     val thunk = () => obs.get("stats")
       .asInstanceOf[scala.collection.Seq[Row]]
       .map { r =>

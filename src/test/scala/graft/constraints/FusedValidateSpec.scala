@@ -105,6 +105,16 @@ class FusedValidateSpec extends AnyFunSuite {
       classic.sourceStats.collect().map(statKey).sortBy(_._1).toSeq)
   }
 
+  test("a NULL source yields verdicts; its referential check fails") {
+    val nullChat = df.withColumn("source",
+      when(col("source") =!= "chat", col("source")))
+    val v = Validator.validateOneScan(spark, nullChat, dim, suite).verdicts.collect()
+      .map(r => (Option(r.getString(0)), r.getString(1)) -> r.getBoolean(2)).toMap
+    assert(v.get((None, "referential")).contains(false))
+    assert(v.get((Some("chat"), "completeness")).contains(false))
+    assert(v.contains((None, "ntok_drift")) && v.contains((None, "token_drift")))
+  }
+
   test("the fused plan carries the stats as CollectMetrics on the violations scan") {
     val obs = org.apache.spark.sql.Observation()
     val observed = df.observe(obs,
